@@ -38,6 +38,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from .catalog import Catalog
 from .functions.money import dec, dec_lit
+from .session import artifact_once
 
 SUPERMARKETS_CTE = """supermarkets AS (
   SELECT s_suppkey AS supermarket_id, s_name AS name, n_name AS city
@@ -89,12 +90,6 @@ def supermarkets(cat: Catalog) -> DataFrame:
     )
 
 
-# Materialized-silver registry: sf_dirs whose products table has
-# been written this process (rebuilt once per process → always fresh
-# vs the source parquet, amortized across every domain query).
-_SILVER_BUILT: set[str] = set()
-
-
 def silver_products_path(sf_dir: str) -> str:
     from .artifacts import artifact_path
 
@@ -114,15 +109,13 @@ def products(cat: Catalog, materialized: bool = True) -> DataFrame:
     for pipelines that want fusion with upstream operators)."""
     if not materialized:
         return _products_expr(cat)
-    path = silver_products_path(cat.sf_dir)
-    if path not in _SILVER_BUILT:
-        from .artifacts import publish
+    from .artifacts import publish
 
-        # Atomic symlink-swap publish: a concurrent process mid-read
-        # keeps its resolved version; overwrite-in-place would delete
-        # files under it (artifacts.py).
-        publish(_products_expr(cat), path)
-        _SILVER_BUILT.add(path)
+    # Atomic symlink-swap publish: a concurrent process mid-read
+    # keeps its resolved version; overwrite-in-place would delete
+    # files under it (artifacts.py).
+    path = silver_products_path(cat.sf_dir)
+    artifact_once(path, lambda: publish(_products_expr(cat), path))
     return cat.spark.read.parquet(path)
 
 

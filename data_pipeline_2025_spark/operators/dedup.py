@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import Catalog, fan_out
 from ..registry import register
+from ..session import session_frame
 from .text import TOKENS_SQL, tokens_col
 
 # ---------------------------------------------------------------- exact
@@ -80,31 +81,6 @@ shingles AS (
     FROM toks
     WHERE len(toks) >= 3
 )"""
-
-
-# Bounded cache of persisted intermediate frames, keyed by
-# (kind, spark application, sf_dir). Round-1 lesson: bare .persist()
-# with no unpersist leaked one cached shingle frame PER QUERY CALL
-# across a 65-query sweep — the reason the driver heap had to be
-# raised to 16g. One handle per kind is both the leak fix and a
-# speedup (q35/q36/q61/q63 now share one materialization, exactly
-# like the "materialize the shingle table once" plan at 100 TB).
-_FRAME_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def _cached_persist(kind: str, spark: SparkSession, sf_dir: str, build) -> DataFrame:
-    key = (kind, spark.sparkContext.applicationId, sf_dir)
-    hit = _FRAME_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for old in [k for k in _FRAME_CACHE if k[:1] == (kind,) and k != key]:
-        try:
-            _FRAME_CACHE.pop(old).unpersist()
-        except Exception:
-            _FRAME_CACHE.pop(old, None)  # session already gone
-    df = build().persist()
-    _FRAME_CACHE[key] = df
-    return df
 
 
 def doc_shingles(docs: DataFrame) -> DataFrame:
@@ -168,7 +144,7 @@ def band_keys(minhash: DataFrame) -> DataFrame:
 
 def shingles_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sh) distinct word-trigram shingles (persisted once
-    per (session, sf_dir) — see _cached_persist)."""
+    per (session, sf_dir) — see session.session_frame)."""
 
     def build() -> DataFrame:
         cat = Catalog(spark, sf_dir)
@@ -177,7 +153,7 @@ def shingles_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         # serialize the whole shingle build on one core.
         return doc_shingles(fan_out(cat.documents, "doc_id"))
 
-    return _cached_persist("shingles", spark, sf_dir, build)
+    return session_frame("shingles", spark, sf_dir, build)
 
 
 def minhash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -189,7 +165,7 @@ def minhash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         return doc_minhash(shingles_df(spark, sf_dir))
 
-    return _cached_persist("minhash", spark, sf_dir, build)
+    return session_frame("minhash", spark, sf_dir, build)
 
 
 JACCARD_THRESHOLD = 0.8
@@ -252,7 +228,7 @@ def rare_shingles_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return sh.join(F.broadcast(hot), "sh", "left_anti")
 
-    return _cached_persist("rare_sh", spark, sf_dir, build)
+    return session_frame("rare_sh", spark, sf_dir, build)
 
 
 @register(
@@ -425,7 +401,7 @@ def lsh_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair table — exactly like the shingle/minhash frames above.
     q36 itself does NOT read this cache: as a registered query it
     times/checks the construction; consumers time the analysis."""
-    return _cached_persist(
+    return session_frame(
         "lsh_pairs", spark, sf_dir, lambda: q36_minhash_lsh_dedup(spark, sf_dir)
     )
 
@@ -850,8 +826,8 @@ SELECT doc_id, simhash FROM simhash
 
 
 def _simhash_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Persisted via the bounded cache (see _cached_persist): the
-    # near-dup query reads it three times.
+    # Persisted once per (session, sf_dir): the near-dup query reads
+    # it three times.
     def build() -> DataFrame:
         cat = Catalog(spark, sf_dir)
         tokd = fan_out(cat.documents, "doc_id").select(
@@ -875,7 +851,7 @@ def _simhash_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             fp = term if fp is None else fp + term
         return bitsums.select("doc_id", fp.alias("simhash"))
 
-    return _cached_persist("simhash", spark, sf_dir, build)
+    return session_frame("simhash", spark, sf_dir, build)
 
 
 @register(

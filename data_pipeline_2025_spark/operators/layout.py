@@ -228,7 +228,7 @@ def q239_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from functools import reduce
 
-    from ..session import session_scratch_dir
+    from ..session import session_sink
 
     ev = Catalog(spark, sf_dir).events.select(
         "event_id",
@@ -237,23 +237,21 @@ def q239_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.to_date("ts").cast("string").alias("day"),
     )
-    import hashlib as _h
 
-    root, fresh = session_scratch_dir(
-        spark, "fmt_q239_" + _h.md5(sf_dir.encode()).hexdigest()[:8]
-    )
-    legs = []
-    for fmt in _RT_FORMATS:
-        path = os.path.join(root, fmt)
-        if fresh or not os.path.isdir(path):
+    def build(root: str) -> None:
+        for fmt in _RT_FORMATS:
             w = ev.write.mode("overwrite").format(fmt)
             if fmt == "csv":
                 w = w.option("header", "true")
-            w.save(path)
+            w.save(os.path.join(root, fmt))
+
+    root, _ = session_sink(spark, "fmt_q239", sf_dir, build)
+    legs = []
+    for fmt in _RT_FORMATS:
         r = spark.read.schema(_RT_SCHEMA).format(fmt)
         if fmt == "csv":
             r = r.option("header", "true")
-        back = r.load(path)
+        back = r.load(os.path.join(root, fmt))
         legs.append(
             back.agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_rows"),

@@ -22,6 +22,7 @@ from ..catalog import Catalog
 from ..functions.money import to_double
 from ..mapping import domain_sql, products
 from ..registry import register
+from ..session import artifact_once
 
 # Fixed parameters: the driver compares deterministic result sets, so
 # each query pins the reference endpoint's parameters to one
@@ -259,7 +260,6 @@ def q47_trigram_fuzzy_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # index is rebuilt incrementally per ingest partition; here it is
 # built lazily once per sf_dir.
 
-_INDEX_CACHE: set[str] = set()
 
 
 def trigram_index_path(sf_dir: str) -> str:
@@ -377,13 +377,13 @@ def build_trigram_index(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the trigram → name posting list as a gold table
     (idempotent per sf_dir)."""
     path = trigram_index_path(sf_dir)
-    if path in _INDEX_CACHE:
-        return path
-    cat = Catalog(spark, sf_dir)
-    names = cat.part.select(F.col("p_name").alias("name")).distinct()
-    build_trigram_index_at(spark, names, path)
-    _INDEX_CACHE.add(path)
-    return path
+
+    def build() -> None:
+        cat = Catalog(spark, sf_dir)
+        names = cat.part.select(F.col("p_name").alias("name")).distinct()
+        build_trigram_index_at(spark, names, path)
+
+    return artifact_once(path, build)
 
 
 @register(

@@ -594,9 +594,9 @@ def neardup_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     decontamination). Same contract as dedup.lsh_pairs_df: q43
     itself never reads this cache (it times/checks construction);
     consumers time the analysis on the materialized graph."""
-    from .dedup import _cached_persist
+    from ..session import session_frame
 
-    return _cached_persist(
+    return session_frame(
         "neardup_pairs",
         spark,
         sf_dir,

@@ -46,9 +46,7 @@ here the "queue" is the table's own commit log.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -62,7 +60,7 @@ from pyspark.sql.datasource import (
 from ..catalog import Catalog
 from ..functions.money import dec, money_out
 from ..registry import register
-from ..session import session_scratch_dir
+from ..session import scratch_dir
 from . import txn
 
 _FEED_SCHEMA = (
@@ -411,11 +409,9 @@ def _apply_feed_batch(mv_dir: str):
 )
 def q228_streaming_cdf_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_txn_changes_source(spark)
-    tag = "cdfs_q228_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root, _fresh = session_scratch_dir(spark, tag)
     # rebuilt per invocation BY DESIGN: the two-run replay lifecycle
     # (and its checkpoint) IS the query, like q219/q220
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir(spark, "cdfs_q228", sf_dir)
     src = os.path.join(root, "src")
     mv = os.path.join(root, "mv")
     ckpt = os.path.join(root, "ckpt")

@@ -18,7 +18,6 @@ from __future__ import annotations
 
 import itertools
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -787,28 +786,9 @@ ORDER BY event_type
     tags=("streaming", "state", "introspection"),
 )
 def q161_state_store_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
+    from ..session import session_sink
 
-    from ..session import session_scratch_dir
-
-    # Session-scoped checkpoint: the streaming probe runs once per
-    # (session, sf_dir); later invocations read the same state files
-    # (removed at interpreter exit) — a per-call mkdtemp leaked a
-    # checkpoint per run.
-    tag = "state_q161_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    ck, fresh = session_scratch_dir(spark, tag)
-    # Partial-build guard (round-5 advisor): session_scratch_dir
-    # registers the dir BEFORE the streaming probe runs, so a crash
-    # mid-build would hand every later invocation fresh=False over a
-    # broken checkpoint. A completion marker (written only after
-    # awaitTermination) is the q162-style version-count guard for a
-    # state-store checkpoint; absent marker → wipe and rebuild.
-    marker = os.path.join(ck, "_probe_complete")
-    if not fresh and not os.path.exists(marker):
-        shutil.rmtree(ck, ignore_errors=True)
-        os.makedirs(ck, exist_ok=True)
-        fresh = True
-    if fresh:
+    def build(ck: str) -> None:
         agg = (
             _events_stream(spark, sf_dir)
             .groupBy("event_type")
@@ -824,8 +804,8 @@ def q161_state_store_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        with open(marker, "w", encoding="utf-8") as f:
-            f.write("ok\n")
+
+    ck, _ = session_sink(spark, "state_q161", sf_dir, build)
     state = spark.read.format("statestore").load(ck)
     return state.select(
         F.col("key.event_type").alias("event_type"),
@@ -881,17 +861,11 @@ ORDER BY event_type
 def q220_stream_dv_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid as _uuid
 
-    from ..session import session_scratch_dir
+    from ..session import scratch_dir
     from . import txn
 
-    import hashlib as _hashlib
-
-    tag = "dvup_q220_" + _hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    sink, _fresh = session_scratch_dir(spark, tag)
-    shutil.rmtree(sink, ignore_errors=True)
-    os.makedirs(sink, exist_ok=True)
-    ckpt_root = sink + "_ckpt"
-    shutil.rmtree(ckpt_root, ignore_errors=True)
+    sink = scratch_dir(spark, "dvup_q220", sf_dir)
+    ckpt_root = scratch_dir(spark, "dvup_q220_ckpt", sf_dir)
 
     def _run_stream() -> None:
         # duplicate delivery: every event arrives twice

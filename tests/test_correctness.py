@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import pytest
 
-from data_pipeline_2025_spark import registry
+from data_pipeline_2025_spark import registry, session
 
 from .oracle import compare
 
@@ -15,10 +15,24 @@ SPECS = registry.load_all()
 
 
 @pytest.mark.parametrize("name", sorted(SPECS))
-def test_query_matches_oracle(name, spark, sf_smoke):
+def test_query_matches_oracle(name, spark, sf_smoke, monkeypatch):
+    """A query served from a session-built sink or frame runs twice:
+    the second call reads the state the first one built (the path
+    bench.py's warm pass takes) and must match the oracle too."""
     spec = SPECS[name]
+    kinds: set = set()
+    build_once = session.build_once
+
+    def recording(key, build):
+        kinds.add(key[0])
+        return build_once(key, build)
+
+    monkeypatch.setattr(session, "build_once", recording)
     problems = compare(spec, spark, sf_smoke)
     assert not problems, f"{name}:\n" + "\n".join(problems)
+    if kinds & {"sink", "frame"}:
+        problems = compare(spec, spark, sf_smoke)
+        assert not problems, f"{name} (second call):\n" + "\n".join(problems)
 
 
 def test_entry_smoke(spark):
